@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * Everything here is reproducible bit-for-bit in ANSI SQL (and therefore in
   * the DuckDB oracle): the hash is "parse the first 15 hex chars of md5 as a
   * base-16 integer" — 60 bits, fits a signed BIGINT — rather than xxhash64,
-  * which only Spark has. All helpers are Column expressions built from
-  * built-in functions (higher-order array functions, no UDFs), so they stay
-  * inside Catalyst and distribute trivially.
+  * which only Spark has. All helpers are Column expressions — built-in
+  * functions or graft's native expressions registered by
+  * [[graft.GraftExtensions]], never UDFs — so they stay inside Catalyst and
+  * distribute trivially.
   *
   * DuckDB mirrors (used by the oracle SQL):
   *   h60(x)          ('0x' || substr(md5(x), 1, 15))::BIGINT
@@ -24,18 +25,14 @@ import org.apache.spark.sql.functions._
   */
 object CrossHash {
 
-  /** 60-bit hash both engines can compute identically. Resolves to the
-    * native codegen expression [[H60]] when [[graft.GraftExtensions]] is
-    * registered in the active session, and falls back to the bit-identical
-    * built-in formulation [[h60Builtin]] otherwise — sessions without the
-    * extension keep working, just without the allocation-free fast path.
+  /** 60-bit hash both engines can compute identically: the native codegen
+    * expression [[H60]], which [[graft.GraftExtensions]] registers.
     */
-  def h60(c: Column): Column =
-    if (hasNativeFunction("graft_h60")) call_function("graft_h60", c.cast("string"))
-    else h60Builtin(c)
+  def h60(c: Column): Column = call_function("graft_h60", c.cast("string"))
 
-  /** Pre-promotion formulation of [[h60]] — the readable spec of the
-    * semantics, for sessions without GraftExtensions.
+  /** Reference spec of [[h60]] in built-in functions, pinned by
+    * OperatorsSpec "h60 column expression equals driver-side h60Local and
+    * builtin form".
     */
   def h60Builtin(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
@@ -82,50 +79,15 @@ object CrossHash {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
-  /** True iff the session's registry has the graft native function — the
-    * plan is BUILT before analysis, so fall back at build time rather than
-    * failing analysis with "Undefined function" in sessions that never
-    * registered GraftExtensions.
-    *
-    * Resolution falls back to the default session so worker threads that
-    * never set an active session (e.g. Etl's table thread pool) still get
-    * the native fast path, and the catalog lookup result is cached per
-    * session (weakly, so a stopped session doesn't pin memory) — registries
-    * are fixed after session construction, and the uncached lookup costs a
-    * catalog round-trip per Column built.
-    */
-  private val nativeFnCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]]())
-
-  private[graft] def hasNativeFunction(name: String): Boolean =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .exists { s =>
-        val perSession = nativeFnCache.synchronized {
-          var m = nativeFnCache.get(s)
-          if (m == null) {
-            m = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-            nativeFnCache.put(s, m)
-          }
-          m
-        }
-        perSession.computeIfAbsent(name, n => s.catalog.functionExists(n)).booleanValue()
-      }
-
   /** Dot product in double precision with a defined (left-to-right) fold
-    * order, so Spark and the oracle sum identical operands identically.
-    * Resolves to the native codegen expression [[DotProductD]] when
-    * [[graft.GraftExtensions]] is registered; falls back to the
-    * bit-identical [[dotDFold]] formulation otherwise.
+    * order, so Spark and the oracle sum identical operands identically:
+    * the native codegen expression [[DotProductD]].
     */
-  def dotD(a: Column, b: Column): Column =
-    if (hasNativeFunction("graft_dot")) call_function("graft_dot", a, b)
-    else dotDFold(a, b)
+  def dotD(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Pre-promotion formulation of [[dotD]] — kept as the readable spec of
-    * the semantics and for sessions without GraftExtensions.
+  /** Reference spec of [[dotD]] as a higher-order fold, pinned by
+    * PropertySpec "chunked block-matrix embeddingPairs == naive same-group
+    * join".
     */
   def dotDFold(a: Column, b: Column): Column =
     aggregate(
@@ -137,48 +99,38 @@ object CrossHash {
 
   /** Fixed-domain histogram of an `array<long>` of bin ids: position b of
     * the returned `array<int>` counts the elements equal to b (NULL and
-    * out-of-range elements skipped). Resolves to the native one-pass
-    * expression [[BinCounts]] when [[graft.GraftExtensions]] is
-    * registered — the langid students' 64-bin feature map paid nBins
-    * array passes per row through the fold formulation (r15 verdict #6);
-    * falls back to [[binCountsFold]], the readable spec of the semantics
-    * and the formulation the DuckDB oracle mirrors.
+    * out-of-range elements skipped): the native one-pass expression
+    * [[BinCounts]] — the langid students' 64-bin feature map paid nBins
+    * array passes per row through the fold formulation (r15 verdict #6).
     */
   def binCounts(bins: Column, nBins: Int): Column = {
     require(nBins > 0, s"nBins=$nBins must be positive")
-    if (hasNativeFunction("graft_bincounts"))
-      call_function("graft_bincounts", bins, lit(nBins))
-    else binCountsFold(bins, nBins)
+    call_function("graft_bincounts", bins, lit(nBins))
   }
 
-  /** Pre-promotion formulation of [[binCounts]] — one size(filter) pass
-    * per bin, kept as the executable spec and for sessions without
-    * GraftExtensions.
+  /** Reference spec of [[binCounts]] — one size(filter) pass per bin, the
+    * formulation the DuckDB oracle mirrors — pinned by OperatorsSpec
+    * "BinCounts: hand-counts; native one-pass ≡ size(filter) fold".
     */
   def binCountsFold(bins: Column, nBins: Int): Column =
     array((0 until nBins).map(b => size(filter(bins, v => v === b))): _*)
 
   /** Per-pattern substring-occurrence counts as `array<int>` (position i
     * = occurrences of `patterns(i)`, OVERLAPPING matches included — the
-    * Aho–Corasick match set). Resolves to the native automaton expression
-    * [[AhoCounts]] when [[graft.GraftExtensions]] is registered —
-    * O(|text| + matches) per row regardless of pattern count, the
-    * blocklist-scan scale path; falls back to a per-pattern position scan
-    * (O(|text| · patterns), the readable spec of the semantics and the
-    * formulation the DuckDB oracle mirrors).
+    * Aho–Corasick match set): the native automaton expression
+    * [[AhoCounts]], O(|text| + matches) per row regardless of pattern
+    * count — the blocklist-scan scale path.
     */
   def ahoCounts(text: Column, patterns: Seq[String]): Column = {
     requireBmpPatterns(patterns)
-    if (hasNativeFunction("graft_aho"))
-      call_function("graft_aho", text, typedlit(patterns))
-    else ahoCountsFold(text, patterns)
+    call_function("graft_aho", text, typedlit(patterns))
   }
 
   /** Shared precondition of the two [[ahoCounts]] formulations: non-empty
     * BMP-only patterns. The native automaton matches UTF-16 code units
     * while the fold formulation slices by CODEPOINT (Spark's substr), so
     * an astral (non-BMP) pattern would make the two diverge — rejected
-    * here rather than silently dispatching to different semantics.
+    * here rather than letting the native path silently leave its spec.
     */
   private[graft] def requireBmpPatterns(patterns: Seq[String]): Unit = {
     require(patterns.nonEmpty && patterns.forall(_.nonEmpty),
@@ -189,9 +141,10 @@ object CrossHash {
         s"got astral pattern(s): ${astral.take(3).mkString(", ")}")
   }
 
-  /** Pre-promotion formulation of [[ahoCounts]]: for each pattern, count
-    * the start positions where the length-|p| slice equals it. Kept as
-    * the executable spec and for sessions without GraftExtensions.
+  /** Reference spec of [[ahoCounts]]: for each pattern, count the start
+    * positions where the length-|p| slice equals it (O(|text| · patterns),
+    * the formulation the DuckDB oracle mirrors). Pinned by OperatorsSpec
+    * "AhoCounts: automaton hand-counts; native ≡ position-scan fold".
     */
   def ahoCountsFold(text: Column, patterns: Seq[String]): Column = {
     requireBmpPatterns(patterns)
@@ -207,17 +160,12 @@ object CrossHash {
     * int,len:int>>`, 1-based starts, overlapping/nested matches each
     * emitting their own span, sorted by (start, len). The ACTING sibling
     * of [[ahoCounts]]: [[graft.operators.Text.exciseSpans]] consumes the
-    * spans to remove or redact the matched regions. Resolves to the
-    * native automaton expression [[AhoSpans]] (one pass per row) when
-    * [[graft.GraftExtensions]] is registered; falls back to the
-    * per-pattern position scan, the readable spec the DuckDB oracle
-    * mirrors.
+    * spans to remove or redact the matched regions. The native automaton
+    * expression [[AhoSpans]], one pass per row.
     */
   def ahoSpans(text: Column, patterns: Seq[String]): Column = {
     requireBmpPatterns(patterns)
-    if (hasNativeFunction("graft_aho_spans"))
-      call_function("graft_aho_spans", text, typedlit(patterns))
-    else ahoSpansFold(text, patterns)
+    call_function("graft_aho_spans", text, typedlit(patterns))
   }
 
   /** Sanitize a CORPUS-DERIVED pattern list before it reaches the
@@ -247,9 +195,9 @@ object CrossHash {
     if (patterns.isEmpty) array().cast("array<int>")
     else ahoCounts(text, patterns)
 
-  /** Pre-promotion formulation of [[ahoSpans]]: per-pattern position
-    * scan emitting (start, len) structs, sorted by (start, len) — the
-    * executable spec of the span semantics.
+  /** Reference spec of [[ahoSpans]]: per-pattern position scan emitting
+    * (start, len) structs, sorted by (start, len) — the formulation the
+    * DuckDB oracle mirrors. Pinned by the OperatorsSpec "AhoSpans" tests.
     */
   def ahoSpansFold(text: Column, patterns: Seq[String]): Column = {
     requireBmpPatterns(patterns)

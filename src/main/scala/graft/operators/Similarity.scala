@@ -584,7 +584,7 @@ object Similarity {
     val spark = batch.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
     // stored model is generation-immutable — memoized per session (r16,
-    // MetaMemo): the centroid scan + the separate dim head were two
+    // SessionMemo): the centroid scan + the separate dim head were two
     // driver jobs per serving micro-batch
     val (cents, dim) = cachedCentsLocal(spark, tp)
     // the dimension contract comes from the STORED model, not from batch
@@ -979,11 +979,11 @@ object Similarity {
   /** The `_meta` head row of a RESOLVED generation prefix, memoized per
     * session (r16): generation metadata is immutable — every rewrite of a
     * family under the same name rewrites `_meta` and therefore the
-    * [[graft.sources.MetaMemo]] fingerprint the entry is keyed on.
+    * [[graft.SessionMemo]] fingerprint the entry is keyed on.
     */
   private def cachedMetaRow(
       spark: org.apache.spark.sql.SparkSession, tp: String): org.apache.spark.sql.Row =
-    graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "meta") {
+    graft.SessionMemo.cached(spark, s"${tp}_meta", "meta") {
       spark.table(s"${tp}_meta").head()
     }
 
@@ -996,7 +996,7 @@ object Similarity {
     */
   private def cachedCentsLocal(
       spark: org.apache.spark.sql.SparkSession, tp: String): (DataFrame, Int) = {
-    val rows = graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "cents") {
+    val rows = graft.SessionMemo.cached(spark, s"${tp}_meta", "cents") {
       spark.table(s"${tp}_cents").collect()
     }
     // the old dim probe read size(cvec) of the scan's first row — the
@@ -1012,7 +1012,7 @@ object Similarity {
   private def cachedBooks(
       spark: org.apache.spark.sql.SparkSession, tp: String,
       m: Int, ks: Int): Array[Array[Array[Double]]] =
-    graft.sources.MetaMemo.cached(spark, s"${tp}_meta", "books") {
+    graft.SessionMemo.cached(spark, s"${tp}_meta", "books") {
       val books = Array.fill(m, ks)(Array.empty[Double])
       spark.table(s"${tp}_books").collect().foreach { r =>
         books(r.getInt(0))(r.getLong(1).toInt - 1) = r.getSeq[Double](2).toArray
@@ -1101,7 +1101,7 @@ object Similarity {
       embCol: String): Unit = {
     val spark = newVecs.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
-    // generation-immutable metadata memoized per session (r16, MetaMemo):
+    // generation-immutable metadata memoized per session (r16, SessionMemo):
     // the meta head, the centroid set and its dimension cost ~3 driver
     // jobs per micro-batch when re-read every append
     val meta = cachedMetaRow(spark, tp)
@@ -1270,6 +1270,8 @@ object Similarity {
     * argmin_c (‖c‖² − 2·sub_j·c) over the literal codebooks (the ‖sub‖²
     * term is constant per row); distance ties break to the smaller code
     * id. Row-local, no shuffle — the 100 TB encode is a map-only pass.
+    * Reference spec of [[pqCodesArray]], pinned by OperatorsSpec "PqEncode:
+    * native one-call codes ≡ array_min candidate fold, incl. NULL/ragged".
     */
   private[graft] def pqCodeCols(
       books: Array[Array[Array[Double]]], subDim: Int, cen: Column): Seq[Column] = {
@@ -1295,24 +1297,19 @@ object Similarity {
       lit(1e-30))
   }
 
-  /** All m PQ codes as ONE `array<int>` column: resolves to the native
-    * one-call expression [[graft.functions.PqEncode]] when
-    * [[graft.GraftExtensions]] is registered — the m·ks inlined
-    * dot-product candidates of [[pqCodeCols]] blew janino's 64 KB
-    * method limit at m=16·ks=16, so every encode stage fell back to
-    * interpreted execution and re-codegen'd the oversized source per
-    * action (r15 verdict #7) — and falls back to the [[pqCodeCols]]
-    * formulation (the executable spec the oracle certificates replay)
-    * otherwise. Values element-for-element identical, incl. the
-    * NULL-vector → all-code-1 and ragged-slice → code-1 shapes the
-    * builders' guards refuse upstream.
+  /** All m PQ codes as ONE `array<int>` column: the native one-call
+    * expression [[graft.functions.PqEncode]] — the m·ks inlined
+    * dot-product candidates of [[pqCodeCols]] blew janino's 64 KB method
+    * limit at m=16·ks=16, so every encode stage fell back to interpreted
+    * execution and re-codegen'd the oversized source per action (r15
+    * verdict #7). Values element-for-element identical to its reference
+    * spec [[pqCodeCols]], incl. the NULL-vector → all-code-1 and
+    * ragged-slice → code-1 shapes the builders' guards refuse upstream.
     */
   private[graft] def pqCodesArray(
       books: Array[Array[Array[Double]]], subDim: Int, cen: Column): Column =
-    if (graft.functions.CrossHash.hasNativeFunction("graft_pq_encode"))
-      call_function("graft_pq_encode", cen,
-        typedlit(books.map(_.map(_.toSeq).toSeq).toSeq), lit(subDim))
-    else array(pqCodeCols(books, subDim, cen): _*)
+    call_function("graft_pq_encode", cen,
+      typedlit(books.map(_.map(_.toSeq).toSeq).toSeq), lit(subDim))
 
   /** [[pqCn2aCol]] reading the packed `codes` array instead of the
     * per-subspace `code*` columns — same element_at lookups, same values.
@@ -1410,7 +1407,7 @@ object Similarity {
     val spark = queries.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
     // generation-immutable model state memoized per session (r16,
-    // MetaMemo): the meta head + the centroid scan behind the probe
+    // SessionMemo): the meta head + the centroid scan behind the probe
     // broadcast were two driver jobs per probe call
     val meta = cachedMetaRow(spark, tp)
     val nlist = metaInt(meta, "nlist", meta.getInt(0))
@@ -1586,7 +1583,7 @@ object Similarity {
     // meta fields read by NAME: an ordinal read would silently swap
     // m/ks/subDim if the meta schema ever reordered — poisoned appends.
     // meta/books/cents are generation-immutable and memoized per session
-    // (r16, MetaMemo) — re-collecting them cost ~3 driver jobs per
+    // (r16, SessionMemo) — re-collecting them cost ~3 driver jobs per
     // micro-batch
     val meta = cachedMetaRow(spark, tp)
     val (m, ks, subDim, buckets) =
@@ -1788,7 +1785,7 @@ object Similarity {
     val spark = queries.sparkSession
     val tp = activeIvfPrefix(spark, tablePrefix)
     // by-name meta reads — see appendToIvfPqIndex. meta/books/cents are
-    // generation-immutable and memoized per session (r16, MetaMemo):
+    // generation-immutable and memoized per session (r16, SessionMemo):
     // re-collecting them cost ~3 driver jobs per probe call
     val meta = cachedMetaRow(spark, tp)
     val (nlist, m, subDim) = (metaInt(meta, "nlist", meta.getInt(0)),

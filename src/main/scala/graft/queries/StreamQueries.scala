@@ -1499,7 +1499,7 @@ object StreamQueries {
         // stream-independent one-shot scoring against the frozen persisted
         // base — computed while the drain runs (guide §2.6, see
         // `overlapping`; the shared serving fold is single-flight in
-        // FrameMemo, so the race with batch 0 builds it exactly once)
+        // SessionMemo, so the race with batch 0 builds it exactly once)
         val oneShot = overlapping {
           Text.scoreAgainstKnModel(docs, "doc_id", toks, prefix)
             .withColumnRenamed("id", "doc_id").localCheckpoint(true)
@@ -1557,7 +1557,7 @@ object StreamQueries {
         // stream-independent one-shot scoring against the frozen persisted
         // base — computed while the drain runs (guide §2.6, see
         // `overlapping`; the shared serving fold is single-flight in
-        // FrameMemo, so the race with batch 0 builds it exactly once)
+        // SessionMemo, so the race with batch 0 builds it exactly once)
         val oneShot = overlapping {
           Text.scoreAgainstKn3Model(docs, "doc_id", toks, prefix)
             .withColumnRenamed("id", "doc_id").localCheckpoint(true)

@@ -114,12 +114,7 @@ object AnnSweep {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession.builder(32)
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft_warehouse_annsweep")
       .getOrCreate()

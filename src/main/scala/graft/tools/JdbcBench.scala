@@ -2,8 +2,6 @@ package graft.tools
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{Jdbc, JdbcConfig, JdbcDialect}
 
 /** Timing evidence for `Jdbc.read`'s partitionColumn path (round-8
@@ -43,11 +41,7 @@ object JdbcBench {
     } finally conn.close()
     println(s"JDBCBENCH generated $n rows in derby at $dir")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val cfg = JdbcConfig(s"jdbc:derby:$dir", user = "app", password = "app",
       dialect = JdbcDialect.Derby)

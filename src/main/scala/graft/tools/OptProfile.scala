@@ -12,22 +12,13 @@ import org.apache.spark.sql.SparkSession
   * bound (guide §1: measure first; §2.6: overlap/fuse independent jobs),
   * not data bound.
   *
-  * Not part of the library surface; mirrors the Bench session config so
-  * timings are comparable.
+  * Not part of the library surface; builds its session like Bench
+  * ([[graft.GraftSession]]) so timings are comparable.
   */
 object OptProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft_warehouse_bench")
       .getOrCreate()
@@ -70,49 +61,6 @@ object OptProfile {
         bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
           .invoke(bus, java.lang.Long.valueOf(10000L))
       } catch { case _: Throwable => Thread.sleep(300) }
-
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"STEP $label ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
-
-    if (args.headOption.contains("ulmsteps")) {
-      import org.apache.spark.sql.functions._
-      import graft.operators.Text
-      val s = spark
-      val d = sfDir
-      val toks = graft.functions.CrossHash.tokens(col("text"))
-      val docs = graft.sources.Tables.load(s, d, "documents")
-      docs.count()
-      val prefix = "ulm_profile_scratch"
-      val (pieces0, segs0) = time("ulmTrain (cold)")(
-        Text.ulmTrain(docs, col("text"), 4, 60, 2))
-      pieces0.count(); segs0.count()
-      time("dropTableFamily")(
-        graft.sources.Sinks.dropTableFamily(s, prefix, Text.UlmSuffixes))
-      val (pieces, segs) = (pieces0, segs0)
-      time("writeUlmModel")(Text.writeUlmModel(pieces, prefix, maxPieceLen = 4))
-      val words = docs.select(explode(toks).as("word"))
-        .filter(col("word") =!= "").distinct()
-      val enc = time("encode+checkpoint")(
-        Text.encodeAgainstUlmModel(words, "word", prefix).localCheckpoint(true))
-      val trained = segs.select("word", "n_pieces", "segs")
-      val served = enc.select("word", "n_pieces", "segs")
-      val parity = time("exceptAll x2")(
-        served.exceptAll(trained).isEmpty && trained.exceptAll(served).isEmpty)
-      time("final join/agg")(
-        docs.select(col("doc_id"), explode(toks).as("word"))
-          .filter(col("word") =!= "")
-          .join(enc.select("word", "n_pieces"), "word")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_words"), sum("n_pieces").as("n_subtoks"))
-          .withColumn("serve_ok", lit(parity)).count())
-      // second round: is the encode cost plan/codegen or execution?
-      val enc2 = time("encode+checkpoint AGAIN")(
-        Text.encodeAgainstUlmModel(words, "word", prefix).localCheckpoint(true))
-      enc2.count()
-      spark.stop(); return
-    }
 
     val frames = graft.queries.SharedFrames.builders.toMap
     def fnFor(name: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =

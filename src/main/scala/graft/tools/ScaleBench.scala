@@ -1184,17 +1184,7 @@ object ScaleBench {
     // core counts to produce the parallel-scaling receipt the sf0.1
     // suite cannot (its residual cost is per-job fixed overhead)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // cap AQE's per-stage plan-change logging: a plan whose printed
-      // tree expands shared subtrees can otherwise OOM/burn the driver
-      // building a string nobody reads (seen on the r10 batch)
-      .config("spark.sql.maxPlanStringLength", (8 << 20).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession.builder(cpus.toInt)
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft_warehouse_scalebench")
       .getOrCreate()

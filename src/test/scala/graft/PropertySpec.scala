@@ -220,14 +220,19 @@ object PropertySpec extends Properties("graft") {
         // lost at tile borders, none duplicated across tiles
         val v = df.select(col("grp"), col("vec_id").as("id"), col("embedding").as("e"))
           .withColumn("nrm", CrossHash.l2Norm(col("e")))
-        val want = v.as("x").join(v.as("y"),
-            col("x.grp") === col("y.grp") && col("x.id") < col("y.id"))
+        val pairs = v.as("x").join(v.as("y"),
+          col("x.grp") === col("y.grp") && col("x.id") < col("y.id"))
+        // the same pairs pin the native graft_dot to its fold spec, bit
+        // for bit on real-valued (summation-order-sensitive) operands
+        val dotsAgree = pairs.filter(!CrossHash.dotD(col("x.e"), col("y.e"))
+          .eqNullSafe(CrossHash.dotDFold(col("x.e"), col("y.e")))).isEmpty
+        val want = pairs
           .select(col("x.id").as("a"), col("y.id").as("b"),
             round(CrossHash.dotD(col("x.e"), col("y.e"))
               / (col("x.nrm") * col("y.nrm")), 4).as("cos"))
           .filter(col("cos") >= 0.2)
           .select("a", "b").as[(Long, Long)].collect().toSet
-        got == want
+        got == want && dotsAgree
       }
     }
 

@@ -46,7 +46,10 @@ def main():
         print(f"UNPINNED {q}: {v:.2f}s (no budget yet — pin it next refresh)")
     for q, v, why in flagged:
         print(f"FLAG {q}: {why}")
-    total = sum(v for v in run.values() if v and v > 0)
+    # the dotted `shared_frame_builds.<name>` entries are components of
+    # the `shared_frame_builds` aggregate; summing both would count that
+    # work twice (Bench's own total sums the aggregate tier only)
+    total = sum(v for q, v in run.items() if "." not in q and v and v > 0)
     print(f"\n{len(run)} queries, total {total:.1f}s; "
           f"{len(flagged)} flagged, {len(unpinned)} unpinned "
           f"(budget table: {len(budgets)} entries)")
