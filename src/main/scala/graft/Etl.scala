@@ -65,13 +65,13 @@ object Etl {
     Transforms.nonEmptyGuard(extracted).map { df =>
       val transformed = Transforms.forTable(spec.name)(df)
       val schema = SchemaRegistry.schemaFor(registry, spec.name)
-      val report = Sinks.load(
-        spark, transformed, schema, s"$outBase/${spec.name}",
-        daily = daily, dayPartitionField = spec.dayPartitionField,
-        table = Some(spec.name))
+      val report = Sinks.loadVia(
+        Sinks.parquetAdapter(spark, s"$outBase/${spec.name}", Some(spec.name)),
+        transformed, schema, daily, spec.dayPartitionField)
+      // one source pass per load: the write counts its own rows, and
       // transforms are row-preserving (rename/drop/cast), so rowsLoaded IS
-      // the extract count — recounting `extracted` would re-run the whole
-      // source scan (a second full table transfer on the JDBC path).
+      // the extract count. Past the guard's limit(1) probe, no other action
+      // touches `extracted` (on JDBC, each would be a full table transfer).
       RunReport(spec.name, report.rowsLoaded, report.rowsLoaded, report.rowsTotal)
     }
   }

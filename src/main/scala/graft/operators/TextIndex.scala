@@ -1084,17 +1084,6 @@ object TextIndex {
     (result, audits)
   }
 
-  /** Lazy probe plan for plan audits (PlanSpec pins bucket pruning on the
-    * postings scan) — identical to [[bm25AgainstIndex]], which is already
-    * lazy; alias kept for the sibling families' naming convention.
-    */
-  private[graft] def bm25AgainstIndexPlan(
-      spark: SparkSession,
-      tablePrefix: String,
-      queryTerms: Seq[String],
-      kTop: Int): DataFrame =
-    bm25AgainstIndex(spark, tablePrefix, queryTerms, kTop)
-
   /** Blue/green rebuild — for scoring-parameter (k1/b) or bucket-count
     * changes; same pointer/resolve contract as the sibling families.
     * Returns the new generation number.

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Structural BigQuery sink adapter — the production write path mirroring
   * the reference's load job (`bigquery_operations.py:21-48`), expressed as
@@ -10,15 +10,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *  - table ref `project.dataset.table` (`bigquery_operations.py:24`);
   *  - DAY time-partitioning on a declared field → `partitionField` +
   *    `partitionType=DAY` options (`bigquery_operations.py:30-34`);
-  *  - write disposition: daily ⇒ WRITE_APPEND ⇒ `SaveMode.Append`,
-  *    full ⇒ WRITE_TRUNCATE ⇒ `SaveMode.Overwrite`
-  *    (`bigquery_operations.py:36`);
+  *  - write disposition: daily ⇒ WRITE_APPEND, full ⇒ WRITE_TRUNCATE
+  *    (`bigquery_operations.py:36`), the same [[Sinks.saveMode]] as the
+  *    parquet path;
   *  - declared schema bound before the write (`bigquery_operations.py:27`)
   *    — handled by [[graft.model.SchemaRegistry.enforce]] via the
   *    [[Sinks.SinkAdapter]] seam, exactly as on the parquet path.
   *
   * The connector jar and network are absent in this environment, so
-  * `adapter()` is exercised structurally (option map + mode unit tests);
+  * `adapter()` is exercised structurally (option map unit tests);
   * the parquet twin carries the verified end-to-end behavior.
   */
 final case class BigQuerySinkConfig(
@@ -33,10 +33,6 @@ object BigQuerySink {
 
   def tableRef(cfg: BigQuerySinkConfig, table: String): String =
     s"${cfg.project}.${cfg.dataset}.$table"
-
-  /** The reference's WRITE_APPEND / WRITE_TRUNCATE split. */
-  def saveMode(daily: Boolean): SaveMode =
-    if (daily) SaveMode.Append else SaveMode.Overwrite
 
   /** Connector options for one table write. */
   def options(
@@ -64,7 +60,7 @@ object BigQuerySink {
     def write(df: DataFrame, daily: Boolean, dayPartitionField: Option[String]): Unit =
       df.write
         .format("bigquery")
-        .mode(saveMode(daily))
+        .mode(Sinks.saveMode(daily))
         .options(options(cfg, table, dayPartitionField))
         .save()
     def countAudit(): Long =

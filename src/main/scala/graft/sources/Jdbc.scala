@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** SQL dialect seam for the JDBC source: identifier quoting and catalog
   * discovery differ per engine, and the reference README claims
@@ -75,9 +74,10 @@ object JdbcDialect {
   *    numPartitions`) so a large table lands as N parallel range scans
   *    instead of one driver-side materialization (`pd.read_sql`,
   *    `mysql_operations.py:27`);
-  *  - the incremental predicate is a Column filter, which Catalyst compiles
-  *    into the remote `WHERE` clause (observable in the JDBC scan's
-  *    PushedFilters), equivalent to `mysql_operations.py:21-23`.
+  *  - the incremental predicate is [[Tables.incremental]]'s Column filter
+  *    over [[Jdbc.read]], which Catalyst compiles into the remote `WHERE`
+  *    clause (observable in the JDBC scan's PushedFilters), equivalent to
+  *    `mysql_operations.py:21-23`.
   *
   * The live path is exercised end-to-end against embedded Derby in
   * `JdbcSpec`; MySQL/Postgres/MSSQL differ only by the options this config
@@ -119,25 +119,6 @@ object Jdbc {
         .option("numPartitions", n)
     }
     withParts.load()
-  }
-
-  /** S2 over JDBC: the daily date-equality semantics as a half-open
-    * timestamp range — attribute-vs-literal comparisons translate directly
-    * into the remote WHERE clause (a `to_date(col)` wrapper would depend
-    * on the optimizer unwrapping it before source translation).
-    */
-  def readIncremental(
-      spark: SparkSession,
-      cfg: JdbcConfig,
-      table: String,
-      tsCol: String,
-      day: java.time.LocalDate): DataFrame = {
-    val df = read(spark, cfg, table)
-    // type-aware UTC-pinned bounds (shared with the file source) — the JVM
-    // default timezone never participates, so the pushed WHERE range is the
-    // same on any host.
-    val (lo, hi) = Tables.dayBounds(df.schema(tsCol).dataType, day)
-    df.filter(col(tsCol) >= lo && col(tsCol) < hi)
   }
 
   /** S3 over JDBC: base-table discovery through the dialect's catalog

@@ -1,6 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.Await
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -26,13 +31,20 @@ object Sinks {
   /** Partition column name added by DAY partitioning. */
   val PartitionCol = "p_date"
 
+  /** K2: the reference's WRITE_APPEND / WRITE_TRUNCATE split — daily ⇒
+    * append, full ⇒ overwrite (`bigquery_operations.py:36`). Every sink
+    * adapter takes its disposition from here.
+    */
+  def saveMode(daily: Boolean): SaveMode =
+    if (daily) SaveMode.Append else SaveMode.Overwrite
+
   /** K2+K3: write with disposition + optional DAY partitioning. */
   def write(
       df: DataFrame,
       path: String,
       daily: Boolean = false,
       dayPartitionField: Option[String] = None): Unit = {
-    val mode = if (daily) SaveMode.Append else SaveMode.Overwrite
+    val mode = saveMode(daily)
     dayPartitionField match {
       case Some(f) =>
         // repartition on the partition value first: otherwise every shuffle
@@ -178,27 +190,41 @@ object Sinks {
       outDir: String,
       targetFileBytes: Long): (Int, Int) = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive: $targetFileBytes")
-    // resolve through the Hadoop FileSystem of the path's scheme, not
-    // java.io.File — on hdfs:// or s3a:// a local listing would return
-    // nothing and silently collapse the whole table into one file
-    def parquetFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
-    val inFiles = parquetFiles(inDir)
+    val inFiles = parquetFiles(spark, new org.apache.hadoop.fs.Path(inDir))
     require(inFiles.nonEmpty, s"no parquet files to compact under $inDir")
-    val totalBytes = inFiles.map(_.getLen).sum
-    // Long arithmetic end-to-end: a tiny target over a 100 TB input must
-    // not overflow Int and collapse to a single output file
-    val nOutL = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes)
-    val nOut = math.min(nOutL, Int.MaxValue.toLong).toInt
     spark.read.parquet(inDir)
-      .repartition(nOut)
+      .repartition(targetFileCount(inFiles, targetFileBytes))
       .write.mode(SaveMode.Overwrite).parquet(outDir)
-    (inFiles.length, parquetFiles(outDir).length)
+    (inFiles.length, parquetFiles(spark, new org.apache.hadoop.fs.Path(outDir)).length)
+  }
+
+  /** Parquet data files directly under `dir` (empty when it does not
+    * exist). Resolved through the Hadoop FileSystem of the path's scheme,
+    * not java.io.File — on hdfs:// or s3a:// a local listing would return
+    * nothing and silently collapse a whole table into one file.
+    */
+  private def parquetFiles(
+      spark: SparkSession, dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** Parquet data files currently backing a managed catalog table. */
+  private def tableFiles(spark: SparkSession, table: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    parquetFiles(spark, new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table)).location))
+
+  /** The compaction sizing rule: ceil(bytes / target) output files, at
+    * least one. Long arithmetic end-to-end — a tiny target over a 100 TB
+    * input must not overflow Int and collapse to a single output file.
+    */
+  private def targetFileCount(
+      files: Seq[org.apache.hadoop.fs.FileStatus], targetFileBytes: Long): Int = {
+    val totalBytes = files.map(_.getLen).sum
+    math.min(math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
+      Int.MaxValue.toLong).toInt
   }
 
   /** Partition-granular retention sweep (TTL) over a `partCol=`-
@@ -416,8 +442,7 @@ object Sinks {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = srcPath.getFileSystem(conf)
     if (!fs.exists(dstPath)) fs.mkdirs(dstPath): Unit
-    val files = fs.listStatus(srcPath).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    val files = parquetFiles(spark, srcPath)
     // copy files CONCURRENTLY (r16 — measured: a sequential FileUtil.copy
     // of one bucketed postings table was 2.25 s of single-threaded driver
     // time, the whole rest of the clone is milliseconds): destinations
@@ -746,65 +771,8 @@ object Sinks {
     }
   }
 
-  /** In-place compaction (vacuum) of a managed catalog table — the index
-    * lifecycle pass the append-maintained bucketed indexes need: per-batch
-    * appends accumulate one file per bucket per batch FOREVER (a year of
-    * daily ingest = hundreds of small files per bucket and, for the gram
-    * index, N_batches partial rows per gram), so probes degrade into
-    * metadata storms even though the bucket layout itself is intact.
-    *
-    * Semantics-preserving by construction: the rewrite goes through the
-    * table's OWN catalog bucket spec (same bucket count, columns, sort),
-    * so probe plans keep consuming the layout with zero Exchange on the
-    * index side — pinned by spec alongside probe-result hash parity. The
-    * optional `rewrite` hook transforms the row set inside the same
-    * stage-then-swap: semantics-preserving re-aggregations (gram-df
-    * partials re-sum to one row per gram — exact, the measure is
-    * additive) and deliberate row deletions (bucket-aligned anti-join of
-    * taken-down document ids) both ride it.
-    *
-    * Atomicity: stage-then-swap. The compacted data lands in a staging
-    * table, then two catalog renames swap it in (original → `__cold`,
-    * stage → original) and the old data is dropped last — a crash leaves
-    * either the original intact or both tables present, never neither.
-    * Non-bucketed tables (e.g. the IVF-PQ `_vecs` side table) compact
-    * through the same path sized by `targetFileBytes`, like [[compact]].
-    *
-    * Returns (input parquet file count, output parquet file count).
-    */
-  def compactTable(
-      spark: SparkSession,
-      table: String,
-      rewrite: DataFrame => DataFrame = identity,
-      targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    require(table.matches("[A-Za-z0-9_]+"),
-      s"compactTable expects an unqualified [A-Za-z0-9_]+ identifier, got '$table'")
-    val before = parquetFileCount(spark, table)
-    val stage = s"${table}__cstage"
-    val old = s"${table}__cold"
-    Seq(stage, old).foreach(dropManagedTable(spark, _))
-    // standalone compaction always re-writes (callers reach for this verb
-    // to merge fragments; the Some() keeps the family path's identity
-    // shortcut from skipping a deliberate merge here)
-    stageCompactedInto(spark, table, stage, Some(rewrite), targetFileBytes)
-    spark.sql(s"ALTER TABLE `$table` RENAME TO `$old`")
-    spark.sql(s"ALTER TABLE `$stage` RENAME TO `$table`")
-    dropManagedTable(spark, old)
-    (before, parquetFileCount(spark, table))
-  }
-
-  /** Parquet data files currently backing a managed catalog table. */
-  private def parquetFiles(
-      spark: SparkSession, table: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-  }
-
   private[graft] def parquetFileCount(spark: SparkSession, table: String): Int =
-    parquetFiles(spark, table).length
+    tableFiles(spark, table).length
 
   /** Bucket id encoded in a bucketed data file's name (`part-NNNNN-
     * <uuid>_BBBBB.c000…parquet`) — the same suffix Spark's own reader
@@ -826,22 +794,15 @@ object Sinks {
       table: String,
       bucketed: Boolean,
       targetFileBytes: Long): Boolean = {
-    val files = parquetFiles(spark, table)
+    val files = tableFiles(spark, table)
     if (bucketed) {
       val ids = files.map(f => bucketIdOf(f.getPath.getName))
       ids.forall(_.isDefined) && ids.flatten.distinct.size == ids.size
-    } else {
-      val totalBytes = math.max(1L, files.map(_.getLen).sum)
-      val nOut = math.min(
-        math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
-        Int.MaxValue.toLong)
-      files.size <= nOut
-    }
+    } else files.size <= targetFileCount(files, targetFileBytes)
   }
 
-  /** The compaction STAGE write shared by [[compactTable]] (stage → two
-    * renames, for standalone tables) and [[compactFamilyCutover]] (stage
-    * into a fresh generation, for pointer-managed families): writes
+  /** The compaction STAGE write behind [[compactFamilyCutover]] (stage
+    * into a fresh generation of a pointer-managed family): writes
     * `rewrite(src)` into `dst` through src's OWN bucket spec at one file
     * per bucket — or size-targeted files when unbucketed — with src's
     * column order re-pinned. An identity member (`rewrite` None) whose
@@ -911,25 +872,21 @@ object Sinks {
           case (k, None) => spark.conf.unset(k)
         }
       case None =>
-        val totalBytes = math.max(1L, parquetFiles(spark, table).map(_.getLen).sum)
-        val nOut = math.min(
-          math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes),
-          Int.MaxValue.toLong).toInt
-        ordered(rewrite(spark.table(table))).repartition(nOut)
+        ordered(rewrite(spark.table(table)))
+          .repartition(targetFileCount(tableFiles(spark, table), targetFileBytes))
           .write.mode(SaveMode.Overwrite)
           .format("parquet").saveAsTable(stage)
     }
   }
 
-  /** Family-level compaction THROUGH THE GENERATION POINTER — closes
-    * [[compactTable]]'s reader gap for pointer-managed index families: the
-    * stage-then-two-renames swap leaves a window where a concurrent
-    * reader resolves NEITHER table name, while here every table of the
-    * compacted family stages into a fresh generation (same one-file-per-
-    * bucket write, `_meta` LAST as the completeness marker), the flip is
-    * the one-row `_current` overwrite every probe already resolves
-    * through, and the retired generation drops after — a reader holds a
-    * complete serving generation at every instant (the
+  /** Family-level compaction THROUGH THE GENERATION POINTER — the
+    * in-place alternative, a stage-then-two-renames swap, leaves a window
+    * where a concurrent reader resolves NEITHER table name, while here
+    * every table of the compacted family stages into a fresh generation
+    * (same one-file-per-bucket write, `_meta` LAST as the completeness
+    * marker), the flip is the one-row `_current` overwrite every probe
+    * already resolves through, and the retired generation drops after — a
+    * reader holds a complete serving generation at every instant (the
     * [[rebuildCutover]] crash-window contract, applied to vacuuming).
     *
     * `rewrites` transforms individual member tables inside the same
@@ -968,7 +925,9 @@ object Sinks {
   /** Sink-choosing seam: one destination's write + audit pair. The parquet
     * leg is [[parquetAdapter]] (verified end-to-end here); the production
     * BigQuery leg is [[BigQuerySink.adapter]] (structural — no connector
-    * jar or network in this environment).
+    * jar or network in this environment). `write` must write the frame it
+    * is given, with no other action on it first: [[loadVia]] counts the
+    * loaded rows from that one action.
     */
   trait SinkAdapter {
     def name: String
@@ -984,11 +943,24 @@ object Sinks {
       def countAudit(): Long = Sinks.countAudit(spark, path)
     }
 
+  /** How long [[loadVia]] waits, after `write` returns, for the row count
+    * the write observed. Spark completes the observation from an
+    * asynchronous listener, normally within milliseconds of the action; a
+    * wait this long means the action never ran.
+    */
+  private[graft] val ObservedRowsWait: FiniteDuration = 30.seconds
+
   /** K1+K2+K3+K5 composite against any [[SinkAdapter]] — the whole
     * `load_to_bigquery` contract (`bigquery_operations.py:21-48`): bind the
     * declared schema, write with the disposition, read back the audit
     * count. Returns (rowsLoaded, rowsTotalAfterLoad) like the reference's
     * two log lines (`bigquery_operations.py:47-48`).
+    *
+    * One pass over the source: `rowsLoaded` is counted BY the write, as a
+    * `count(1)` observation on the frame the adapter writes — no separate
+    * count action re-runs the extract (on JDBC, a second full table
+    * transfer). An adapter whose `write` runs no action on the frame it is
+    * given fails loudly after [[ObservedRowsWait]] instead of hanging.
     */
   def loadVia(
       sink: SinkAdapter,
@@ -996,20 +968,18 @@ object Sinks {
       schema: StructType,
       daily: Boolean = false,
       dayPartitionField: Option[String] = None): LoadReport = {
-    val bound = SchemaRegistry.enforce(df, schema)
-    val loaded = bound.count()
-    sink.write(bound, daily, dayPartitionField)
-    LoadReport(sink.name, loaded, sink.countAudit())
+    val rows = Observation()
+    sink.write(SchemaRegistry.enforce(df, schema).observe(rows, count(lit(1)).as("rows")),
+      daily, dayPartitionField)
+    val observed =
+      try Await.result(rows.future, ObservedRowsWait)
+      catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"sink '${sink.name}': no row count observed within $ObservedRowsWait — " +
+            "its `write` ran no action on the frame it was given")
+      }
+    if (observed.length != 1) throw new IllegalStateException(
+      s"sink '${sink.name}': the write finished without collecting its row count")
+    LoadReport(sink.name, observed.getLong(0), sink.countAudit())
   }
-
-  /** [[loadVia]] against the parquet destination. */
-  def load(
-      spark: SparkSession,
-      df: DataFrame,
-      schema: StructType,
-      path: String,
-      daily: Boolean = false,
-      dayPartitionField: Option[String] = None,
-      table: Option[String] = None): LoadReport =
-    loadVia(parquetAdapter(spark, path, table), df, schema, daily, dayPartitionField)
 }

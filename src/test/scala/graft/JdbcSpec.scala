@@ -3,7 +3,7 @@ package graft
 import java.sql.DriverManager
 import java.time.LocalDate
 
-import graft.sources.{Jdbc, JdbcConfig, JdbcDialect}
+import graft.sources.{Jdbc, JdbcConfig, JdbcDialect, Tables}
 
 /** Live end-to-end exercise of the JDBC extract path (reference S5,
   * `mysql_operations.py:8-41`) against EMBEDDED Derby — the engine Spark
@@ -44,7 +44,9 @@ class JdbcSpec extends SparkSpec {
   }
 
   test("incremental day filter is pushed into the remote WHERE clause") {
-    val df = Jdbc.readIncremental(spark, cfg, "APP.BACKUPS", "BACKUP_DATE", LocalDate.of(2026, 3, 1))
+    // the production composition (Etl.runTable's daily extract)
+    val df = Tables.incremental(Jdbc.read(spark, cfg, "APP.BACKUPS"), "BACKUP_DATE",
+      LocalDate.of(2026, 3, 1))
     assert(df.count() == 40, "half-open UTC day range must select exactly day-1 rows")
     // the range predicate must reach the source scan, not run post-scan in
     // Spark — the scan node's (untruncated) metadata lists the pushed

@@ -35,8 +35,8 @@ class SinksSpec extends SparkSpec {
   }
 
   test("BigQuery write disposition: daily=APPEND, full=TRUNCATE") {
-    assert(BigQuerySink.saveMode(daily = true) == SaveMode.Append)
-    assert(BigQuerySink.saveMode(daily = false) == SaveMode.Overwrite)
+    assert(Sinks.saveMode(daily = true) == SaveMode.Append)
+    assert(Sinks.saveMode(daily = false) == SaveMode.Overwrite)
   }
 
   test("loadVia seam: parquet adapter reproduces Sinks.load, custom adapter observed") {
@@ -60,6 +60,45 @@ class SinksSpec extends SparkSpec {
       daily = true, dayPartitionField = Some("d"))
     assert(r == Sinks.LoadReport("rec", 2, 42L))
     assert(written.contains((2L, true, Some("d"))))
+  }
+
+  test("loadVia reads its input once: the write counts its own rows") {
+    // every source row bumps the accumulator each time a job computes it,
+    // so a separate count action before the write would read 2n
+    val n = 3000L
+    val reads = spark.sparkContext.longAccumulator("loadVia_source_rows")
+    val day0 = java.sql.Timestamp.valueOf("2024-01-01 06:00:00").getTime
+    val src = spark.range(0L, n, 1L, 4).map { i =>
+      reads.add(1L)
+      (i.longValue, new java.sql.Timestamp(day0 + (i % 5) * 86400000L))
+    }.toDF("id", "ts")
+    val schema = SchemaRegistry.fromJson(
+      """{"t": [{"name": "id", "type": "INTEGER"}, {"name": "ts", "type": "TIMESTAMP"}]}""")
+    val out = java.nio.file.Files.createTempDirectory("graft_once").toString
+    val r = Sinks.loadVia(Sinks.parquetAdapter(spark, s"$out/t"), src,
+      SchemaRegistry.schemaFor(schema, "t"), dayPartitionField = Some("ts"))
+    assert(r == Sinks.LoadReport("t", n, n))
+    assert(reads.value == n, s"source rows read ${reads.value} times for $n rows")
+    assert(spark.read.parquet(s"$out/t").select(Sinks.PartitionCol).distinct().count() == 5)
+  }
+
+  test("loadVia fails loudly when the adapter's write runs no action") {
+    val df = Seq((1L, "a")).toDF("id", "name")
+    val schema = SchemaRegistry.fromJson(
+      """{"t": [{"name": "id", "type": "INTEGER"}, {"name": "name", "type": "STRING"}]}""")
+    val idle = new Sinks.SinkAdapter {
+      val name = "idle"
+      def write(d: org.apache.spark.sql.DataFrame, daily: Boolean, f: Option[String]): Unit = ()
+      def countAudit(): Long = 0L
+    }
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Sinks.loadVia(idle, df, SchemaRegistry.schemaFor(schema, "t"))
+    }
+    val waited = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("'idle'") && e.getMessage.contains("ran no action"),
+      e.getMessage)
+    assert(waited < Sinks.ObservedRowsWait.toSeconds + 10, s"waited $waited s")
   }
 
   test("retention sweep drops only expired day= partitions, leaves foreign entries") {
@@ -355,9 +394,9 @@ class SinksSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.functions.CrossHash
     import graft.operators.TextIndex
-    // 1. compactTable's stage-then-two-renames: between the renames the
+    // 1. an in-place stage-then-two-renames swap: between the renames the
     //    table name resolves to NOTHING — staged here explicitly. This is
-    //    why pointer-managed families must not compact through it.
+    //    why pointer-managed families compact through the pointer instead.
     Seq("cg_tbl", "cg_tbl__cold").foreach(Sinks.dropManagedTable(spark, _))
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable("cg_tbl")
